@@ -29,3 +29,6 @@ checkpointed per-partition lineage for idempotent resume.
 __version__ = "0.1.0"
 
 from gdal_spark.session import get_spark  # noqa: F401
+from gdal_spark.session import install_worker_import_cache
+
+install_worker_import_cache()

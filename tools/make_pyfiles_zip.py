@@ -7,25 +7,11 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def build(dst: str) -> str:
-    pkg = os.path.join(ROOT, "gdal_spark")
-    with zipfile.ZipFile(dst, "w", zipfile.ZIP_DEFLATED) as zf:
-        for base, _dirs, files in os.walk(pkg):
-            if "__pycache__" in base:
-                continue
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
-                full = os.path.join(base, f)
-                zf.write(full, os.path.relpath(full, ROOT))
-    return dst
-
+from gdal_spark.session import build_pyfiles_zip  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/gdal_spark.zip"
-    print(build(out))
+    print(build_pyfiles_zip(out))
